@@ -80,6 +80,53 @@ def test_cas_batch_guard_replay(spark, tmp_path):
     assert set(man["batches"]) == {"1", "2"} and man["batches"]["2"] == recs2
 
 
+def test_cas_skip_keys_on_batch_membership(spark, tmp_path):
+    """Only a batch id the manifest records is skipped: a gap in the
+    recorded ids must export (not KeyError), and so must a lower id
+    from a fresh checkpoint that the manifest has never seen."""
+    out = str(tmp_path / "cas")
+    cas_export(_docs(spark, 30), out, "day", batch_id=1)
+    cas_export(_docs(spark, 30), out, "day", batch_id=3)
+    # gap: batch 2 was never committed
+    gap = _docs(spark, 40).filter(F.col("k") >= 30)
+    recs2 = cas_export(gap, out, "day", batch_id=2)
+    assert sum(r["rows"] for r in recs2) == 10
+    # fresh checkpoint: ids restart at 0, below the recorded ones
+    fresh = _docs(spark, 45).filter(F.col("k") >= 40)
+    recs0 = cas_export(fresh, out, "day", batch_id=0)
+    assert sum(r["rows"] for r in recs0) == 5
+    man = read_manifest(out)
+    assert set(man["batches"]) == {"0", "1", "2", "3"}
+    assert man["batches"]["2"] == recs2 and man["batches"]["0"] == recs0
+    back = spark.read.parquet(*[os.path.join(out, f) for f in _files(out)])
+    assert sorted(r["k"] for r in back.collect()) == list(range(45))
+
+
+def test_cas_files_share_one_arrow_schema(spark, tmp_path):
+    """A column that is all NULL in one partition's slice keeps the
+    DataFrame's type in that slice's file (not an inferred null type)."""
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "cas")
+    df = _docs(spark, 30).withColumn(
+        "note", F.when(F.col("day") != "0", F.col("v"))
+    ).withColumn(
+        "n", F.when(F.col("day") != "0", F.col("k"))
+    )
+    cas_export(df, out, "day")
+    schemas = {
+        f: pq.read_schema(os.path.join(out, f)).remove_metadata()
+        for f in _files(out)
+    }
+    assert len(schemas) == 3
+    assert len(set(map(str, schemas.values()))) == 1
+    one = next(iter(schemas.values()))
+    assert str(one.field("note").type) == "string"
+    assert str(one.field("n").type) == "int64"
+    back = spark.read.parquet(*[os.path.join(out, f) for f in _files(out)])
+    assert back.filter(F.col("note").isNull()).count() == 10
+
+
 def test_relay_cas_sink_e2e(spark, tmp_path):
     p = GenParams(n_events=1500, n_repos=8, n_files=4)
     write_event_log(generate_events(p), str(tmp_path / "events"), p.n_files)

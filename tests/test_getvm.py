@@ -69,6 +69,37 @@ def test_row_level_exit_codes(spark):
     assert out["short"] == (None, 5)
 
 
+def test_null_code_hash_is_no_method(spark):
+    # a NULL code_hash has no program: exit 11, never a bare exit 0
+    df = _df(spark, [("a", "c1", "10|32"), ("n", None, "10|32")])
+    out = _collect(
+        run_get_method(df, REG, "sum_fields", 1), "out_0", "vm_exit_code"
+    )
+    assert out["a"] == ("42", 0)
+    assert out["n"] == (None, 11)
+
+
+def test_arithmetic_on_non_numeric_is_type_error(spark):
+    # no to_int before the arithmetic: the coerced NaN is still exit 2
+    reg = {
+        "c1": {
+            "raw_add": [("push_field", 0), ("push_field", 1), ("add",)],
+            "raw_div": [("push_field", 0), ("push_field", 1), ("div",)],
+        }
+    }
+    df = _df(spark, [("ok", "c1", "84|2"), ("bad", "c1", "x|2"),
+                     ("bad_den", "c1", "84|y"), ("div0", "c1", "84|0")])
+    add = _collect(run_get_method(df, reg, "raw_add", 1), "out_0", "vm_exit_code")
+    assert add["ok"] == ("86", 0)
+    assert add["bad"] == (None, 2)
+    assert add["bad_den"] == (None, 2)
+    div = _collect(run_get_method(df, reg, "raw_div", 1), "out_0", "vm_exit_code")
+    assert div["ok"] == ("42", 0)
+    assert div["bad"] == (None, 2)
+    assert div["bad_den"] == (None, 2)
+    assert div["div0"] == (None, 4)
+
+
 def test_floor_division_negative(spark):
     # numpy floor semantics, pinned so the SQL oracle (floor(a/b)) stays
     # byte-identical: -85 // 2 == -43, not -42

@@ -35,6 +35,7 @@ import os
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -61,9 +62,20 @@ def cas_export(
 
     Returns the file records `[{partition, sha, rows}, ...]` (also
     appended to `_cas_manifest.json` when `batch_id` is given; a
-    batch_id at or below the committed high-water mark is skipped
-    entirely and its recorded files are returned — exactly-once under
-    redelivery, same contract as LakeTable merges).
+    batch_id the manifest already records is skipped entirely and its
+    recorded files are returned — exactly-once under redelivery, same
+    contract as LakeTable merges. The skip keys on membership, not on
+    a high-water mark: batch ids from a fresh checkpoint or with gaps
+    still export).
+
+    Files are written with local `open`/`os.replace` inside the tasks,
+    so `out_dir` must be a filesystem the executors share with the
+    driver (local mode, or a shared mount); object-store URIs are not
+    supported.
+
+    Every file carries one Arrow schema, derived on the driver from
+    `df.schema`: a slice in which a column is all NULL must not infer
+    a `null` column type that differs from the other files.
 
     Plan shape: one groupBy-exchange on the partition column with
     applyInPandas (NOT mapInPandas: Arrow's record-batch splitting
@@ -77,13 +89,13 @@ def cas_export(
     row-chunked writes keep the serialized buffer bounded."""
     if batch_id is not None:
         man = read_manifest(out_dir)
-        committed = max((int(b) for b in man["batches"]), default=-1)
-        if batch_id <= committed:
+        if str(batch_id) in man["batches"]:
             return man["batches"][str(batch_id)]
 
     os.makedirs(out_dir, exist_ok=True)
     cols = df.columns
     sort_cols = [c for c in cols if c != partition_col]
+    arrow_schema = to_arrow_schema(df.schema)
 
     def write_group(g: pd.DataFrame) -> pd.DataFrame:
         import pyarrow as pa
@@ -102,7 +114,9 @@ def cas_export(
             chunk = g.iloc[lo:lo + max_rows_per_file]
             buf = io.BytesIO()
             pq.write_table(
-                pa.Table.from_pandas(chunk, preserve_index=False),
+                pa.Table.from_pandas(
+                    chunk, schema=arrow_schema, preserve_index=False
+                ),
                 buf, compression="snappy",
             )
             data = buf.getvalue()

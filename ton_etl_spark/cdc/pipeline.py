@@ -18,8 +18,10 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..lake.merge import merge_into
@@ -403,6 +405,65 @@ def _resolve_renames(
 REPO_EVENT_TYPES = ("file_upsert", "file_delete", "file_rename")
 
 
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Janino compilations so far in this JVM (driver and, in local
+    mode, every executor task)."""
+    cm = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(cm.METRIC_COMPILATION_TIME().getCount())
+
+
+def run_sink_chains(spark: SparkSession, chains: dict) -> tuple[dict, dict]:
+    """Run an epoch's independent sink chains and wait for all of them.
+
+    `chains` maps a chain name to a callable that commits its tables in
+    order. Chains share no table, so each runs on its own driver thread
+    and their per-commit latencies overlap instead of adding up; the
+    jobs of all chains share the executors under the FIFO scheduler.
+    The threads inherit the caller's Spark local properties (job group,
+    streaming query tags). A single chain runs inline on the caller's
+    thread.
+
+    Every chain finishes before this returns or raises: if one fails,
+    the others still run to completion (each table keeps its own
+    batch_id guard, so a replay of the epoch heals whatever did not
+    commit) and then the first error is re-raised. Nothing commits
+    after the caller has seen the error.
+
+    Returns ({chain: result}, {chain: wall ms})."""
+    results: dict = {}
+    wall_ms: dict[str, int] = {}
+    errors: list[BaseException] = []
+
+    def run(name, fn):
+        t = time.time()
+        try:
+            results[name] = fn()
+        except BaseException as e:  # noqa: BLE001 - re-raised below
+            errors.append(e)
+        finally:
+            wall_ms[name] = int((time.time() - t) * 1000)
+
+    if len(chains) == 1:
+        [(name, fn)] = chains.items()
+        run(name, fn)
+    else:
+        threads = [
+            threading.Thread(
+                target=inheritable_thread_target(spark)(run),
+                args=(name, fn),
+                name=f"sink-{name}",
+            )
+            for name, fn in chains.items()
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+    if errors:
+        raise errors[0]
+    return results, wall_ms
+
+
 def apply_batch(
     spark: SparkSession,
     table: LakeTable,
@@ -416,9 +477,11 @@ def apply_batch(
     blacklist=None,    # cdc.blacklist.LearnedBlacklist
     mature_lsn: int | None = None,   # F5 gate cutoff (None+gated: all deferred)
     gated: bool = False,             # events carry an immature tail to defer
+    novel_feed=None,   # cdc.curation.NovelContentFeed over `table`
 ) -> dict:
     t0 = time.time()
-    timings: dict[str, int] = {}
+    compiles0 = _codegen_compiles(spark)
+    timings: dict = {}
 
     def mark(name: str, since: float) -> float:
         timings[name] = timings.get(name, 0) + int((time.time() - since) * 1000)
@@ -433,8 +496,12 @@ def apply_batch(
         # guard must decide (merge_into re-checks and skips the main
         # table); without fan-out the whole batch is a proven no-op.
         # Gated runs must also continue: the caller needs this batch's
-        # lsn_max_seen/n_immature to recompute the pending store.
+        # lsn_max_seen/n_immature to recompute the pending store. The
+        # feed still drains: the crash may have landed between the main
+        # commit and the feed's.
         if fanout is None and gold is None and not gated:
+            if novel_feed is not None:
+                novel_feed.run()
             return {"skipped": True, "batch_id": batch_id}
     # 1. control-plane events (DDL + renames) in ONE small collect —
     #    schema_change events are global barriers in the log (WAL DDL
@@ -655,35 +722,74 @@ def apply_batch(
             stats["bl_bad_capped"] = bl_capped
         t = mark("stats_ms", t)
 
-    result = merge_into(
-        table, updates, batch_id=batch_id, salt=salt, precomputed=precomputed
-    )
-    for p in ren_persisted:
-        # the merge has materialized every plan that reads the rename
-        # candidates / chain output — release the blocks before fan-out
-        p.unpersist()
-
-    # silver fan-out + incremental gold maintenance: each table carries
-    # its own batch_id guard, so a crash between any two commits heals
-    # on replay (the un-committed ones re-apply, the committed skip)
-    types_present = set(row0["types"] or [])
-    if fanout is not None:
-        result["silver"] = fanout.apply(
-            events, batch_id=batch_id, types_present=types_present
+    # 4. the sink graph. Each table carries its own batch_id guard, so a
+    #    crash between any two commits heals on replay (the un-committed
+    #    ones re-apply, the committed skip). Chains share no table:
+    #      main:     main merge -> novel feed (tails the main table)
+    #      <silver>: one chain per fact event type -> the gold
+    #                maintainers that read it (gold reads trades)
+    def main_chain():
+        res = merge_into(
+            table, updates, batch_id=batch_id, salt=salt,
+            precomputed=precomputed,
         )
-    golds = (
-        list(gold) if isinstance(gold, (list, tuple))
-        else ([gold] if gold is not None else [])
-    )
-    gres = {
-        g.name: g.update(events, batch_id=batch_id, lsn_max=row0["lsn_max_all"])
-        for g in golds
-        if types_present & set(g.trigger_types)
-    }
-    if gres:
-        result["gold"] = gres
+        for p in ren_persisted:
+            # the merge has materialized every plan that reads the
+            # rename candidates / chain output — release the blocks
+            p.unpersist()
+        if novel_feed is not None:
+            novel_feed.run()
+        return res
 
-    mark("merge_ms", t)
+    silver_res: dict = {}
+    gold_res: dict = {}
+
+    def sink_chain(event_type, golds_after):
+        def run():
+            if event_type is not None:
+                silver_res.update(fanout.apply(
+                    events, batch_id=batch_id, types_present={event_type}
+                ))
+            for g in golds_after:
+                gold_res[g.name] = g.update(
+                    events, batch_id=batch_id, lsn_max=row0["lsn_max_all"]
+                )
+        return run
+
+    types_present = set(row0["types"] or [])
+    golds = [
+        g for g in (
+            list(gold) if isinstance(gold, (list, tuple))
+            else ([gold] if gold is not None else [])
+        )
+        if types_present & set(g.trigger_types)
+    ]
+    # fact event type -> the chain that commits its silver table(s)
+    chain_of: dict[str, str] = {}
+    for sp in fanout.specs if fanout is not None else []:
+        if sp.event_type in types_present:
+            chain_of.setdefault(sp.event_type, sp.name)
+    after: dict[str | None, list] = {}
+    for g in golds:
+        # a maintainer reads the silver table of its trigger type
+        name = next((chain_of[e] for e in sorted(g.trigger_types)
+                     if e in chain_of), None)
+        after.setdefault(name, []).append(g)
+    chains = {"main": main_chain}
+    for et, name in chain_of.items():
+        chains[name] = sink_chain(et, after.get(name, []))
+    if None in after:
+        chains["gold"] = sink_chain(None, after[None])
+    t = time.time()
+    outs, chain_ms = run_sink_chains(spark, chains)
+    timings["sinks_ms"] = int((time.time() - t) * 1000)
+    timings["sinks"] = chain_ms
+    result = outs["main"]
+    if fanout is not None:
+        result["silver"] = silver_res
+    if gold_res:
+        result["gold"] = gold_res
+
     timings["total_ms"] = int((time.time() - t0) * 1000)
     # absolute wall interval of this batch: benchmark CPU attribution
     # must sample the batch's REAL window, not one reconstructed from
@@ -691,7 +797,8 @@ def apply_batch(
     # make reconstructed windows drift earlier batch by batch)
     result.update(
         ddl=applied_ddl, salt=salt, timings=timings,
-        t_wall=[t0, time.time()], **stats,
+        t_wall=[t0, time.time()],
+        codegen_classes=_codegen_compiles(spark) - compiles0, **stats,
     )
     if gated:
         result["lsn_max_seen"] = row0["_lsn_max_seen"]
@@ -936,6 +1043,38 @@ class CdcPipeline:
             )
         self.novel_feed = novel_feed
 
+    def _apply(
+        self,
+        events: DataFrame,
+        batch_id: int | None,
+        mature_lsn: int | None = None,
+        gated: bool = False,
+    ) -> dict:
+        """Apply one epoch to every attached sink and record it. The
+        sink chains (main table -> curation feed, each silver table ->
+        its gold maintainers) commit concurrently inside `apply_batch`
+        and have all finished when it returns, so the caller's gate swap
+        and the streaming checkpoint still come last. The feed drains
+        the commit(s) this epoch made; a crash in there redelivers the
+        batch and the feed's own guards replay/skip as needed."""
+        res = apply_batch(
+            self.spark,
+            self.table,
+            events,
+            batch_id=batch_id,
+            monitor=self.monitor,
+            collect_stats=self.collect_stats,
+            fanout=self.fanout,
+            gold=self.gold,
+            blacklist=self.blacklist,
+            mature_lsn=mature_lsn,
+            gated=gated,
+            novel_feed=self.novel_feed,
+        )
+        self.batch_results.append(res)
+        self.batches_applied += 1
+        return res
+
     def _handle(self, batch_df: DataFrame, batch_id: int) -> None:
         allev = cutoff = None
         cached = None
@@ -947,21 +1086,11 @@ class CdcPipeline:
             batch_df = allev
         elif self.cache_batch:
             cached = batch_df = batch_df.persist()
-        res = apply_batch(
-            self.spark,
-            self.table,
-            batch_df,
-            batch_id=batch_id,
-            monitor=self.monitor,
-            collect_stats=self.collect_stats,
-            fanout=self.fanout,
-            gold=self.gold,
-            blacklist=self.blacklist,
-            mature_lsn=cutoff,
-            gated=self.gate is not None,
+        res = self._apply(
+            batch_df, batch_id, mature_lsn=cutoff, gated=self.gate is not None
         )
         if self.gate is not None:
-            # pointer swap only after every sink commit above succeeded
+            # pointer swap only after every sink chain above committed
             n_imm = res.get("n_immature") or 0
             immature = (
                 allev.filter(F.col("lsn") > F.lit(cutoff))
@@ -982,14 +1111,6 @@ class CdcPipeline:
             allev.unpersist()
         if cached is not None:
             cached.unpersist()
-        if self.novel_feed is not None:
-            # drain the curation feed over the commit(s) this epoch just
-            # made — runs before the checkpoint records the batch, so a
-            # crash in here redelivers the batch and the feed's own
-            # guards replay/skip as needed
-            self.novel_feed.run()
-        self.batch_results.append(res)
-        self.batches_applied += 1
         if self.fail_after is not None and self.batches_applied >= self.fail_after:
             # simulate a crash AFTER the sink committed but BEFORE the
             # checkpoint recorded the batch — the exactly-once razor's edge
@@ -1036,21 +1157,8 @@ class CdcPipeline:
         pend = self.gate.read_pending()
         if pend is None:
             return None
-        res = apply_batch(
-            self.spark,
-            self.table,
-            pend,
-            batch_id=None,
-            monitor=self.monitor,
-            collect_stats=self.collect_stats,
-            fanout=self.fanout,
-            gold=self.gold,
-            blacklist=self.blacklist,
-        )
+        res = self._apply(pend, None)
         self.gate.clear()
-        if self.novel_feed is not None:
-            self.novel_feed.run()
-        self.batch_results.append(res)
         return res
 
     def run_batch(self) -> dict:
@@ -1069,21 +1177,4 @@ class CdcPipeline:
                 "maturity gate requires run_streaming()"
             )
         events = self.spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(self.event_dir)
-        res = apply_batch(
-            self.spark,
-            self.table,
-            events,
-            batch_id=None,
-            monitor=self.monitor,
-            collect_stats=self.collect_stats,
-            fanout=self.fanout,
-            gold=self.gold,
-            blacklist=self.blacklist,
-        )
-        if self.novel_feed is not None:
-            self.novel_feed.run()
-        # keep the applied-work counters consistent with streaming mode
-        # (the CLI's replay summary reported "batches": 0 otherwise)
-        self.batch_results.append(res)
-        self.batches_applied += 1
-        return res
+        return self._apply(events, None)

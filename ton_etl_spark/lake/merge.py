@@ -349,6 +349,9 @@ def merge_into(
         "agg_ms": agg_ms,
         "write_ms": write_ms,
         "wall_ms": int((time.time() - t0) * 1000),
+        # absolute interval: the _metrics rows of tables committed in
+        # the same epoch show how far their sink chains overlapped
+        "t_wall": [t0, time.time()],
     }
     table.commit(new_manifest, metrics)
     return {"skipped": False, **metrics}

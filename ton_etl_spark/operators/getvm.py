@@ -123,16 +123,16 @@ def _run_program(
             stack.append(s)
         elif op in ("add", "sub", "mul", "div"):
             b, a = stack.pop(), stack.pop()
+            a, b = pd.to_numeric(a, errors="coerce"), pd.to_numeric(b, errors="coerce")
+            # a non-numeric operand is a type error even when the program
+            # has no explicit to_int before the arithmetic
+            fail(a.isna() | b.isna(), 2)
             if op == "div":
-                zero = pd.to_numeric(b, errors="coerce") == 0
+                zero = b == 0
                 fail(zero, 4)
-                b = b.mask(zero, 1)  # placeholder; masked by exit code
-                stack.append(
-                    (pd.to_numeric(a, errors="coerce")
-                     // pd.to_numeric(b, errors="coerce"))
-                )
+                # placeholder divisor; the row is masked by its exit code
+                stack.append(a // b.mask(zero, 1))
             else:
-                a, b = pd.to_numeric(a, errors="coerce"), pd.to_numeric(b, errors="coerce")
                 stack.append(a + b if op == "add" else a - b if op == "sub" else a * b)
         elif op == "concat":
             b, a = stack.pop(), stack.pop()
@@ -188,7 +188,9 @@ def run_get_method(
                 out_cols = [pd.Series(None, index=pdf.index, dtype="object")
                             for _ in range(n_out)]
                 exit_all = pd.Series(0, index=pdf.index, dtype="int32")
-                for ch, g in pdf.groupby(code_col, sort=False):
+                # dropna=False: a NULL code_hash is its own group and
+                # gets exit 11 below instead of keeping the initial 0
+                for ch, g in pdf.groupby(code_col, sort=False, dropna=False):
                     prog = registry.get(ch, {}).get(method)
                     if prog is None:
                         exit_all.loc[g.index] = NO_METHOD
